@@ -119,7 +119,6 @@ class IndexConfig:
 
     n_segments: int = 32
     block_size: int = codec.BLOCK_SIZE
-    codec: str = "varint"  # "varint" (LEB128 stream) | "for" (bit-packed FOR)
     stopwords: Optional[object] = None  # None | "_english_" | explicit list
     # custom analysis chain spec (name or dict, see analysis/chain.py);
     # None = the standard-analyzer fast path (AnalysisRegistry.java:683).
@@ -278,7 +277,6 @@ def _invert_segment(
         block_ends = np.append(block_starts[1:], nd)
         nblocks = block_starts.size
 
-        bc = codec.get_codec(cfg.codec)
         gaps = np.diff(d_docs, prepend=np.int64(0))
         gaps[block_starts] = 0  # first doc of a block is delta-0 vs base_doc
         norms_all = d_norms.astype(np.uint8).tobytes()
@@ -313,15 +311,15 @@ def _invert_segment(
                 "max_tf": max_tf.astype(np.int32),
                 "min_norm": min_norm.astype(np.int32),
                 "max_tf_norm": max_tf_norm.astype(np.int32),
-                "docs_bin": bc.encode_blocks(gaps, block_starts, block_ends),
-                "tfs_bin": bc.encode_blocks(tf, block_starts, block_ends),
+                "docs_bin": codec.encode_blocks(gaps, block_starts, block_ends),
+                "tfs_bin": codec.encode_blocks(tf, block_starts, block_ends),
                 "norms_bin": [
                     norms_all[s:e] for s, e in zip(block_starts, block_ends)
                 ],
             }
         )
         if cfg.store_positions:
-            post["pos_bin"] = bc.encode_blocks(
+            post["pos_bin"] = codec.encode_blocks(
                 pos_deltas,
                 post_starts[block_starts],
                 post_starts[block_ends],
@@ -419,7 +417,7 @@ def build_index(
         "version": 1,
         "n_segments": cfg.n_segments,
         "block_size": cfg.block_size,
-        "codec": cfg.codec,
+        "codec": "varint",
         "stopwords": cfg.stopwords,
         "analyzer": cfg.analyzer,
         "search_analyzer": cfg.search_analyzer,

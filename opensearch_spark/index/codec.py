@@ -120,70 +120,27 @@ def block_bounds(n: int, block_size: int = BLOCK_SIZE) -> Tuple[np.ndarray, np.n
     return starts, ends
 
 
-# --------------------------------------------------------------- FOR codec
-
-def for_encode_block(vals: np.ndarray) -> bytes:
-    """Frame-of-reference bit packing for one block: 1 header byte =
-    bit width (max over the block), then the values packed at that
-    width, LSB-first — the Lucene ``ForUtil`` layout idea
-    (``Lucene99PostingsFormat`` 128-doc FOR blocks; SURVEY.md §4.11)."""
-    v = np.asarray(vals).astype(np.uint64)
-    if v.size == 0:
-        return b"\x00"
-    w = int(int(v.max()).bit_length())
-    if w == 0:
-        return b"\x00"
-    bits = ((v[:, None] >> np.arange(w, dtype=np.uint64)) & np.uint64(1)).astype(np.uint8)
-    return bytes([w]) + np.packbits(bits, bitorder="little").tobytes()
+def encode_blocks(values: np.ndarray, starts: np.ndarray, ends: np.ndarray):
+    """Varint-encode ``values`` as one stream and slice it into the
+    blocks ``[starts[i], ends[i])`` by byte offsets (fully vectorized —
+    the build fast path).  Each block decodes with ``varint_decode``."""
+    v = np.asarray(values).astype(np.uint64)
+    stream = varint_encode(v)
+    off = np.concatenate(([0], np.cumsum(varint_byte_lengths(v))))
+    return [stream[off[s] : off[e]] for s, e in zip(starts, ends)]
 
 
-def for_decode_block(buf: bytes, n: int) -> np.ndarray:
-    """Inverse of :func:`for_encode_block` (needs the value count)."""
-    w = buf[0]
-    if w == 0:
-        return np.zeros(int(n), dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8, offset=1), bitorder="little")
-    m = bits[: int(n) * w].reshape(int(n), w).astype(np.uint64)
-    return (m << np.arange(w, dtype=np.uint64)).sum(axis=1, dtype=np.uint64)
+class UnsupportedCodecError(ValueError):
+    """An index whose plan.json names a posting codec other than varint
+    (the only layout this engine reads)."""
 
 
-class VarintCodec:
-    """LEB128 stream codec: one shared encode pass, blocks sliced by
-    byte offsets (fully vectorized — the build fast path)."""
-
-    name = "varint"
-
-    @staticmethod
-    def encode_blocks(values: np.ndarray, starts: np.ndarray, ends: np.ndarray):
-        v = np.asarray(values).astype(np.uint64)
-        stream = varint_encode(v)
-        off = np.concatenate(([0], np.cumsum(varint_byte_lengths(v))))
-        return [stream[off[s] : off[e]] for s, e in zip(starts, ends)]
-
-    @staticmethod
-    def decode(buf: bytes, n: int) -> np.ndarray:
-        return varint_decode(buf)
-
-
-class ForCodec:
-    """Per-block FOR bit packing (per-block width byte).  Denser than
-    varint for small-gap runs (hot terms), at a per-block Python-loop
-    encode cost."""
-
-    name = "for"
-
-    @staticmethod
-    def encode_blocks(values: np.ndarray, starts: np.ndarray, ends: np.ndarray):
-        v = np.asarray(values).astype(np.uint64)
-        return [for_encode_block(v[s:e]) for s, e in zip(starts, ends)]
-
-    @staticmethod
-    def decode(buf: bytes, n: int) -> np.ndarray:
-        return for_decode_block(buf, n)
-
-
-CODECS = {c.name: c for c in (VarintCodec, ForCodec)}
-
-
-def get_codec(name: str):
-    return CODECS[name or "varint"]
+def check_plan(plan: dict) -> dict:
+    """Return ``plan`` if its postings are varint-encoded, else raise
+    :class:`UnsupportedCodecError`."""
+    name = plan.get("codec", "varint")
+    if name != "varint":
+        raise UnsupportedCodecError(
+            f"index postings use codec {name!r}; only 'varint' is supported"
+        )
+    return plan

@@ -335,7 +335,6 @@ def _append_cfg(engine) -> IndexConfig:
     return IndexConfig(
         n_segments=int(plan["n_segments"]),
         block_size=int(plan.get("block_size") or IndexConfig.block_size),
-        codec=plan.get("codec", "varint"),
         stopwords=plan.get("stopwords"),
         analyzer=plan.get("analyzer"),
         search_analyzer=plan.get("search_analyzer"),

@@ -125,7 +125,6 @@ def _repack_partition(
     block_size: int,
     with_pos: bool,
     deleted: Optional[np.ndarray] = None,
-    codec_name: str = "varint",
 ) -> pd.DataFrame:
     """Re-pack ALL (term, salt) runs of one partition in one vectorized
     pass (same reduceat machinery as the builder's ``_invert_segment``).
@@ -139,17 +138,16 @@ def _repack_partition(
             {f.name: pd.Series(dtype="object") for f in _PACK_SCHEMA.fields}
         )
     n_docs_in = pdf["n_docs"].to_numpy(np.int64)
-    bc = codec.get_codec(codec_name)
 
     docs = np.concatenate(
         [
-            np.cumsum(bc.decode(r.docs_bin, int(r.n_docs)).astype(np.int64))
+            np.cumsum(codec.varint_decode(r.docs_bin).astype(np.int64))
             + np.int64(r.base_doc)
             for r in pdf.itertuples()
         ]
     )
     tfs_list = [
-        bc.decode(r.tfs_bin, int(r.n_docs)).astype(np.int64) for r in pdf.itertuples()
+        codec.varint_decode(r.tfs_bin).astype(np.int64) for r in pdf.itertuples()
     ]
     tfs = np.concatenate(tfs_list)
     norms = np.concatenate(
@@ -158,7 +156,7 @@ def _repack_partition(
     if with_pos:
         pos = np.concatenate(
             [
-                codec.positions_from_deltas(bc.decode(r.pos_bin, int(t.sum())), t)
+                codec.unpack_positions(r.pos_bin, t)
                 for r, t in zip(pdf.itertuples(), tfs_list)
             ]
         )
@@ -212,8 +210,8 @@ def _repack_partition(
         "max_tf_norm": _max_tf_norm(tfs, norms, starts, out_start_mask).astype(
             np.int32
         ),
-        "docs_bin": [bytes(b) for b in bc.encode_blocks(gaps, starts, ends)],
-        "tfs_bin": [bytes(b) for b in bc.encode_blocks(tfs, starts, ends)],
+        "docs_bin": [bytes(b) for b in codec.encode_blocks(gaps, starts, ends)],
+        "tfs_bin": [bytes(b) for b in codec.encode_blocks(tfs, starts, ends)],
         "norms_bin": [norms_all[s:e] for s, e in zip(starts, ends)],
     }
     if with_pos:
@@ -223,7 +221,7 @@ def _repack_partition(
             pos_deltas[occ_starts[:-1]] = pos[occ_starts[:-1]]
         out["pos_bin"] = [
             bytes(b)
-            for b in bc.encode_blocks(pos_deltas, occ_starts[starts], occ_starts[ends])
+            for b in codec.encode_blocks(pos_deltas, occ_starts[starts], occ_starts[ends])
         ]
     else:
         out["pos_bin"] = [None] * starts.size
@@ -251,7 +249,7 @@ def merge_index(
         plan = json.load(f)
     block_size = int(plan["block_size"])
     with_pos = bool(plan.get("store_positions", True))
-    codec_name = plan.get("codec", "varint")
+    codec.check_plan(plan)
     n_docs = int(plan["n_docs"])
 
     post = spark.read.parquet(sp["postings"])
@@ -297,8 +295,7 @@ def merge_index(
         chunks = [c for c in batches if len(c)]
         if chunks:
             yield _repack_partition(
-                pd.concat(chunks, ignore_index=True), block_size, with_pos, deleted,
-                codec_name,
+                pd.concat(chunks, ignore_index=True), block_size, with_pos, deleted
             )
 
     packed = (

@@ -38,7 +38,7 @@ class InvertedIndex:
     @cached_property
     def plan(self) -> Dict:
         with open(self.paths["plan"]) as f:
-            return json.load(f)
+            return codec.check_plan(json.load(f))
 
     @cached_property
     def stats(self) -> Dict:
@@ -293,7 +293,6 @@ class InvertedIndex:
             fields.append(T.StructField("positions", T.ArrayType(T.LongType())))
         schema = T.StructType(fields)
 
-        bc = codec.get_codec(self.plan.get("codec", "varint"))
         out_names = [f.name for f in fields]
 
         def decode(batches):
@@ -344,9 +343,9 @@ class InvertedIndex:
 
                 for j in range(nb):
                     n = int(nds[j])
-                    gaps = bc.decode(docs_bins[j], n).astype(np.int64)
+                    gaps = codec.varint_decode(docs_bins[j]).astype(np.int64)
                     docs = np.cumsum(gaps) + np.int64(bases[j])
-                    tfs = bc.decode(tfs_bins[j], n).astype(np.int64)
+                    tfs = codec.varint_decode(tfs_bins[j]).astype(np.int64)
                     norms = np.frombuffer(norms_bins[j], dtype=np.uint8)
                     doc_p.append(docs)
                     tf_p.append(tfs.astype(np.int32))
@@ -354,11 +353,8 @@ class InvertedIndex:
                     term_p.append(np.repeat(terms_b[j], n))
                     if with_positions:
                         npos = int(tfs.sum())
-                        deltas = bc.decode(pos_bins[j], npos)
                         pv_p.append(
-                            codec.positions_from_deltas(deltas, tfs).astype(
-                                np.int64
-                            )
+                            codec.unpack_positions(pos_bins[j], tfs).astype(np.int64)
                         )
                         pl_p.append(tfs)
                         pv_total += npos

@@ -85,7 +85,7 @@ def build_search_as_you_type(
     for name, analyzer in specs:
         d = os.path.join(root_dir, f"field={name}")
         if not os.path.exists(os.path.join(d, "stats.json")):
-            # preserve EVERY base setting (codec, stopwords, n_segments,
+            # preserve EVERY base setting (block_size, stopwords, n_segments,
             # index_sort, ...); only the text column and — for shingle
             # subfields — the analyzer pair are overridden (the shingle
             # analyzer must drive BOTH index and search analysis, so a

@@ -14,7 +14,7 @@ whose patterns overlap at the SAME priority are rejected at put time
 
 Spark-first mapping: settings keys are ``IndexConfig`` fields
 (analyzer, search_analyzer, stopwords, n_segments, index_sort,
-id_cols, routing_col, text_col, codec, ...); ``resolve_config``
+id_cols, routing_col, text_col, block_size, ...); ``resolve_config``
 returns the merged ``IndexConfig`` and ``create_index`` builds
 through the ordinary ``build_index`` path, so a template is pure
 configuration — the build itself is unchanged and everything the

@@ -763,11 +763,6 @@ def _sloppy_freq_rpt_flat(
     return out
 
 
-# A/B switch for the batched sloppy walk (bench evidence: set False to
-# force the scalar PhraseQueue simulation on the same query; results
-# must be identical — only throughput changes).  Read at PLAN time.
-SLOPPY_BATCH_ENABLED = True
-
 def _list_col_runs(rb, name: str) -> Tuple[np.ndarray, np.ndarray]:
     """(values, lens) of an Arrow ListArray column as int64 numpy — the
     values compacted to the batch rows' contiguous region, so per-doc
@@ -2586,15 +2581,6 @@ class SearchEngine:
         ]
         from opensearch_spark.query.similarities import Scripted
 
-        if isinstance(sim, Scripted):
-            score_col = lambda: sim.score_full_col(  # noqa: E731
-                F.col("tf"), F.col("dl"), F.col("df"), F.col("ttf"),
-                float(N), sum_dl, float(avgdl),
-            )
-        else:
-            score_col = lambda: sim.score_col(  # noqa: E731
-                F.col("tf"), F.col("idf"), F.col("dl")
-            )
         post = self.index.postings_for_terms([r[0] for r in rows])
         if len(rows) <= INLINE_STATS_MAX_TERMS:
             # the per-term constants are plan-time literals: inline them
@@ -2606,27 +2592,55 @@ class SearchEngine:
             # query, not two+).  Large expansion sets (wildcard/fuzzy)
             # keep the broadcast join: a 10k-branch CASE would blow up
             # codegen, and there the scan dwarfs the extra job anyway.
-            def _case(idx: int, typ: str):
-                e = F.when(F.col("term") == rows[0][0], F.lit(rows[0][idx]))
-                for r in rows[1:]:
-                    e = e.when(F.col("term") == r[0], F.lit(r[idx]))
-                return e.cast(typ)
+            def _case(idx: int, lit) -> Column:
+                return F.expr(
+                    bm25.term_case_sql({r[0]: lit(r[idx]) for r in rows})
+                )
 
-            post = (
-                post.withColumn("idf", _case(1, "double"))
-                .withColumn("df", _case(2, "double"))
-                .withColumn("ttf", _case(3, "double"))
-                .withColumn("weight", _case(4, "int"))
+            post = post.select(
+                "*",
+                _case(1, bm25.sql_double).alias("idf"),
+                _case(2, bm25.sql_double).alias("df"),
+                _case(3, bm25.sql_double).alias("ttf"),
+                _case(4, str).alias("weight"),
             )
         else:
             stats_df = self.spark.createDataFrame(
                 rows, "term string, idf double, df double, ttf double, weight int"
             )
             post = post.join(F.broadcast(stats_df), "term")
-        return (
-            post.withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn("s", score_col())
-            .select("term", "_docid", "s", "weight")
+        if isinstance(sim, Scripted):
+            s = sim.score_full_col(
+                F.col("tf"), bm25.norm_decode_col("norm_byte"), F.col("df"),
+                F.col("ttf"), float(N), sum_dl, float(avgdl),
+            )
+        else:
+            s = sim.clause_col("tf", "idf", "norm_byte")
+        return post.select("term", "_docid", s.alias("s"), "weight")
+
+    def _phrase_idf(self, terms: Sequence[str]) -> Optional[float]:
+        """Summed idf of the distinct ``terms`` — the weight of a
+        phrase-style clause — or None when any of them is absent from
+        the corpus (the clause then matches nothing)."""
+        uniq = sorted(set(terms))
+        stats = self.index.term_stats(uniq)
+        if len(stats) < len(uniq):
+            return None
+        N = self.index.stats["doc_count"]
+        return float(sum(bm25.idf(int(d), N) for d in stats["df"]))
+
+    def _clause_scores(
+        self, frame: DataFrame, freq: str, idf: float | str, boost: float = 1.0
+    ) -> DataFrame:
+        """The one clause tail of every frequency scorer: keep rows with
+        ``freq`` > 0, score ``freq`` as a BM25 clause against the row's
+        ``norm_byte`` (``idf``: float or SQL fragment), times ``boost``
+        -> (_docid, score)."""
+        s = bm25.score_col(
+            freq, idf, "norm_byte", self.index.stats["avgdl"], self.k1, self.b
+        )
+        return frame.filter(F.col(freq) > 0).select(
+            "_docid", (s.cast("double") * F.lit(float(boost))).alias("score")
         )
 
     def _score_common_terms(self, q: "Q.CommonTerms") -> DataFrame:
@@ -2729,12 +2743,9 @@ class SearchEngine:
         for i, t in enumerate(tokens):
             qpos_by_term.setdefault(t, []).append(i)
         uniq = sorted(qpos_by_term)
-        stats = self.index.term_stats(uniq)
-        if len(stats) < len(uniq):
+        idf_sum = self._phrase_idf(uniq)
+        if idf_sum is None:
             return self._empty_scored()  # some phrase term absent from corpus
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
 
         post = self.index.postings_for_terms(uniq, with_positions=True)
         agg = (
@@ -2747,22 +2758,17 @@ class SearchEngine:
             .filter(F.col("nt") == F.lit(len(uniq)))
         )
 
-        scored = self._phrase_score_from_tp(agg, qpos_by_term, idf_sum, avgdl)
-        if p.boost != 1.0:
-            scored = scored.withColumn("score", F.col("score") * F.lit(float(p.boost)))
-        return scored
+        return self._phrase_score_from_tp(agg, qpos_by_term, idf_sum, p.boost)
 
     def _phrase_score_from_tp(
-        self, agg: DataFrame, qpos_by_term: dict, idf_sum, avgdl: float
+        self, agg: DataFrame, qpos_by_term: dict, idf_sum: float | str, boost: float
     ) -> DataFrame:
         """Shared phrase-frequency scorer: ``agg`` has per-doc
         (tp: list<(term, positions)>, norm_byte); phrase tf = count of
         anchor positions where every query slot's term appears at the
-        right offset (Arrow-batched numpy intersection).  ``idf_sum``
-        may be a Python float or a Column (for plan-time-unknown
-        components like the phrase-prefix expansion df)."""
-        if isinstance(idf_sum, (int, float)):
-            idf_sum = F.lit(float(idf_sum))
+        right offset.  ``idf_sum`` may be a Python float or a SQL
+        fragment (for run-time components like the phrase-prefix
+        expansion df)."""
         # r4 (VERDICT #9): the exact-phrase frequency is pure position
         # algebra with NO sequential data dependency, so it lowers to
         # JVM higher-order functions instead of a per-doc pandas UDF —
@@ -2785,20 +2791,8 @@ class SearchEngine:
             return reduce(lambda a, b: a & b, conds) if conds else F.lit(True)
 
         ptf_col = F.size(F.filter(pmap[F.lit(first_t)], _all_slots))
-
-        scored = (
-            agg.withColumn("ptf", ptf_col.cast("int"))
-            .filter(F.col("ptf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("ptf"), idf_sum, F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid", F.col("s").cast("double").alias("score")
+        return self._clause_scores(
+            agg.withColumn("ptf", ptf_col.cast("int")), "ptf", idf_sum, boost
         )
 
     def _score_match_bool_prefix(self, q: Q.MatchBoolPrefix) -> DataFrame:
@@ -2820,7 +2814,10 @@ class SearchEngine:
             return self._empty_scored()
         fuzz = getattr(q, "fuzziness", None)
         parts = []
-        for i, term in enumerate(dict.fromkeys(tokens[:-1])):
+        # one clause per token OCCURRENCE, like the reference's
+        # BooleanQuery: a repeated token scores and counts toward
+        # minimum_should_match once per occurrence
+        for i, term in enumerate(tokens[:-1]):
             if fuzz is not None:
                 exp = sorted(self._expand_terms(Q.Fuzzy(
                     self.text_col, term, fuzziness=fuzz,
@@ -2834,7 +2831,7 @@ class SearchEngine:
             else:
                 clause = self._score_terms_or({term: 1}, required=1)
             parts.append(clause.withColumn("_clause", F.lit(i)))
-        n_clauses = len(dict.fromkeys(tokens[:-1])) + 1
+        n_clauses = len(tokens)
         prefix_terms = self._expand_terms(Q.Prefix(self.text_col, tokens[-1]))
         if prefix_terms:
             parts.append(
@@ -2881,23 +2878,21 @@ class SearchEngine:
             return ds.withColumn("score", F.lit(float(q.boost)))
         fixed = tokens[:-1]
         uniq_fixed = sorted(set(fixed))
-        stats = self.index.term_stats(uniq_fixed)
-        if len(stats) < len(uniq_fixed):
+        fixed_idf = self._phrase_idf(uniq_fixed)
+        if fixed_idf is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
         union_post = self.index.postings_for_terms(expansions, with_positions=True)
         # union df of the expansions (the pseudo-term's document
         # frequency) is computed INSIDE the plan — a 1-row aggregate
         # broadcast-cross-joined into the scorer — instead of an eager
-        # distinct().count() job at plan time (one job per query saved)
-        fixed_idf = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
+        # distinct().count() job at plan time (one job per query saved);
+        # its idf enters the clause as a SQL fragment over ``_dfu``
         dfu = union_post.agg(
             F.count_distinct(F.col("_docid")).cast("double").alias("_dfu")
         )
-        idf_col = F.lit(fixed_idf) + F.log(
-            F.lit(1.0)
-            + (F.lit(float(N)) - F.col("_dfu") + F.lit(0.5)) / (F.col("_dfu") + F.lit(0.5))
+        idf_sql = (
+            f"{bm25.sql_double(fixed_idf)}"
+            f" + {bm25.idf_sql('_dfu', self.index.stats['doc_count'])}"
         )
         pseudo = "\x00prefix"
         post_fixed = self.index.postings_for_terms(uniq_fixed, with_positions=True)
@@ -2930,8 +2925,7 @@ class SearchEngine:
             .filter(F.col("nt") == F.lit(n_slots_terms))
             .join(F.broadcast(dfu))
         )
-        scored = self._phrase_score_from_tp(agg, qpos_by_term, idf_col, avgdl)
-        return scored.withColumn("score", F.col("score") * F.lit(float(q.boost)))
+        return self._phrase_score_from_tp(agg, qpos_by_term, idf_sql, q.boost)
 
     def _score_multi_match(self, q: Q.MultiMatch) -> DataFrame:
         """Per-field match clauses combined best_fields (dis_max) or
@@ -3163,12 +3157,9 @@ class SearchEngine:
         if len(terms) == 1:
             return self._score_terms_or({terms[0]: 1}, required=1, boost=boost)
         uniq = sorted(set(terms))
-        stats = self.index.term_stats(uniq)
-        if len(stats) < len(uniq):
+        idf_sum = self._phrase_idf(uniq)
+        if idf_sum is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(uniq, with_positions=True)
         agg = (
             post.groupBy("_docid")
@@ -3189,93 +3180,52 @@ class SearchEngine:
                 "span gaps require in_order=true (SpanNearQuery.addGap)"
             )
 
-        if SLOPPY_BATCH_ENABLED:
-            # Arrow-native lockstep enumeration (same pivot shape as
-            # the sloppy scorer): ordered -> the searchsorted-chain
-            # kernel over per-slot runs; unordered -> the merged-stream
-            # minimal-window kernel over the distinct terms
-            slot_of = [uniq.index(t) for t in order_terms]
-            steps = [
-                1 + (fixed_gaps[i] if fixed_gaps else 0)
-                for i in range(len(order_terms) - 1)
-            ]
-            total_len = len(order_terms) + (sum(fixed_gaps) if fixed_gaps else 0)
-            piv = agg.select(
-                "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
-            ).select(
-                "_docid",
-                "norm_byte",
-                *[
-                    F.element_at(F.col("pm"), F.lit(t)).alias(f"_p{i}")
-                    for i, t in enumerate(uniq)
-                ],
-            )
-
-            def arrow_itf(batches):
-                import pyarrow as pa_
-
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    runs = [_list_col_runs(rb, f"_p{i}") for i in range(len(uniq))]
-                    if want_ordered:
-                        itf = _ordered_intervals_count_flat(
-                            [runs[s][0] for s in slot_of],
-                            [runs[s][1] for s in slot_of],
-                            steps,
-                            total_len,
-                            gap_budget,
-                        )
-                    else:
-                        itf = _unordered_intervals_count_flat(
-                            [r[0] for r in runs],
-                            [r[1] for r in runs],
-                            gap_budget,
-                        )
-                    yield _emit_metric_batch(
-                        rb, "itf", itf.astype(np.int32), pa_.int32()
-                    )
-
-            base = piv.mapInArrow(
-                arrow_itf, "_docid long, norm_byte int, itf int"
-            )
-        else:
-
-            @F.pandas_udf(T.IntegerType())
-            def interval_tf(tp: pd.Series) -> pd.Series:
-                def one(entries) -> int:
-                    pos = {}
-                    for e in entries:
-                        if isinstance(e, dict):
-                            pos[e["term"]] = np.asarray(
-                                e["positions"], dtype=np.int64
-                            )
-                        else:
-                            pos[e[0]] = np.asarray(e[1], dtype=np.int64)
-                    return _count_intervals(
-                        pos, order_terms, gap_budget, want_ordered, fixed_gaps
-                    )
-
-                return tp.map(one).astype("int32")
-
-            base = agg.select(
-                "_docid", "norm_byte", interval_tf(F.col("tp")).alias("itf")
-            )
-
-        scored = (
-            base.filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
+        # Arrow-native lockstep enumeration (same pivot shape as
+        # the sloppy scorer): ordered -> the searchsorted-chain
+        # kernel over per-slot runs; unordered -> the merged-stream
+        # minimal-window kernel over the distinct terms
+        slot_of = [uniq.index(t) for t in order_terms]
+        steps = [
+            1 + (fixed_gaps[i] if fixed_gaps else 0)
+            for i in range(len(order_terms) - 1)
+        ]
+        total_len = len(order_terms) + (sum(fixed_gaps) if fixed_gaps else 0)
+        piv = agg.select(
+            "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
+        ).select(
             "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
+            "norm_byte",
+            *[
+                F.element_at(F.col("pm"), F.lit(t)).alias(f"_p{i}")
+                for i, t in enumerate(uniq)
+            ],
         )
+
+        def arrow_itf(batches):
+            import pyarrow as pa_
+
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                runs = [_list_col_runs(rb, f"_p{i}") for i in range(len(uniq))]
+                if want_ordered:
+                    itf = _ordered_intervals_count_flat(
+                        [runs[s][0] for s in slot_of],
+                        [runs[s][1] for s in slot_of],
+                        steps,
+                        total_len,
+                        gap_budget,
+                    )
+                else:
+                    itf = _unordered_intervals_count_flat(
+                        [r[0] for r in runs],
+                        [r[1] for r in runs],
+                        gap_budget,
+                    )
+                yield _emit_metric_batch(rb, "itf", itf.astype(np.int32), pa_.int32())
+
+        base = piv.mapInArrow(arrow_itf, "_docid long, norm_byte int, itf int")
+        return self._clause_scores(base, "itf", idf_sum, boost)
 
     def _score_intervals_filtered(self, q) -> DataFrame:
         """``intervals`` with a ``filter`` clause (IntervalFilter.java
@@ -3316,12 +3266,9 @@ class SearchEngine:
             return self._empty_scored()
         buniq = sorted(set(base_terms))
         funiq = sorted(set(filt_terms))
-        stats = self.index.term_stats(buniq)
-        if len(stats) < len(buniq):
+        idf_sum = self._phrase_idf(buniq)
+        if idf_sum is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         alln = sorted(set(buniq) | set(funiq))
         post = self.index.postings_for_terms(alln, with_positions=True)
         agg = (
@@ -3390,21 +3337,7 @@ class SearchEngine:
         base = agg.select(
             "_docid", "norm_byte", filtered_itf(F.col("tp")).alias("itf")
         )
-        scored = (
-            base.filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(idf_sum), F.col("dl"),
-                    avgdl, self.k1, self.b,
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score"),
-        )
+        return self._clause_scores(base, "itf", idf_sum, q.boost)
 
     def _score_sloppy_phrase(
         self, tokens: List[str], slop: int, boost: float
@@ -3423,12 +3356,9 @@ class SearchEngine:
         if len(tokens) == 1:
             return self._score_terms_or({tokens[0]: 1}, required=1, boost=boost)
         uniq = sorted(set(tokens))
-        stats = self.index.term_stats(uniq)
-        if len(stats) < len(uniq):
+        idf_sum = self._phrase_idf(uniq)
+        if idf_sum is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(uniq, with_positions=True)
         agg = (
             post.groupBy("_docid")
@@ -3452,172 +3382,80 @@ class SearchEngine:
         # the last per-doc-Python scoring fallback (VERDICT r4
         # perf_weak: stopword-heavy "the .. the"~N phrases decode large
         # candidate sets).
-        no_repeats = SLOPPY_BATCH_ENABLED and len(set(order_terms)) == len(
-            order_terms
+        # repeated terms share their unique column: the collision-aware
+        # kernel maps slots -> unique columns itself (no per-slot copies)
+        slot_term = [uniq.index(t) for t in order_terms]
+        repeats = len(uniq) < len(order_terms)
+        piv = agg.select(
+            "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
+        ).select(
+            "_docid",
+            "norm_byte",
+            *[
+                F.element_at(F.col("pm"), F.lit(t)).alias(f"_p{i}")
+                for i, t in enumerate(uniq)
+            ],
         )
-        if no_repeats:
-            k = len(order_terms)
-            piv = agg.select(
-                "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
-            ).select(
-                "_docid",
-                "norm_byte",
-                *[
-                    F.element_at(F.col("pm"), F.lit(t)).alias(f"_p{i}")
-                    for i, t in enumerate(order_terms)
-                ],
-            )
 
-            def arrow_stf(batches):
-                import pyarrow as pa_
+        def arrow_stf(batches):
+            import pyarrow as pa_
 
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    flats, offs_l, lens_l = [], [], []
-                    for i in range(k):
-                        v, l = _list_col_runs(rb, f"_p{i}")
-                        flats.append(v - i)  # offset-adjust term i
-                        offs_l.append(_runs_offsets(l))
-                        lens_l.append(l)
-                    if k == 2:
-                        stf = _sloppy_freq_2term_flat(
-                            flats[0], offs_l[0], lens_l[0],
-                            flats[1], offs_l[1], lens_l[1], gap_budget,
-                        )
-                    else:
-                        stf = _sloppy_freq_krow_flat(
-                            flats,
-                            np.stack(offs_l, axis=1),
-                            np.stack(lens_l, axis=1),
-                            gap_budget,
-                        )
-                    yield _emit_metric_batch(rb, "stf", stf, pa_.float64())
-
-            base = piv.mapInArrow(
-                arrow_stf, "_docid long, norm_byte int, stf double"
-            )
-        elif SLOPPY_BATCH_ENABLED:
-            # repeated terms: pivot the UNIQUE term position arrays and
-            # map slots -> unique columns inside the kernel (dup slots
-            # share the raw arrays — no per-slot copies)
-            uterms = uniq  # sorted unique terms
-            slot_term = [uterms.index(t) for t in order_terms]
-            u = len(uterms)
-            piv = agg.select(
-                "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
-            ).select(
-                "_docid",
-                "norm_byte",
-                *[
-                    F.element_at(F.col("pm"), F.lit(t)).alias(f"_p{i}")
-                    for i, t in enumerate(uterms)
-                ],
-            )
-
-            def arrow_rpt(batches):
-                import pyarrow as pa_
-
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    flats, offs_l, lens_l = [], [], []
-                    for i in range(u):
-                        v, l = _list_col_runs(rb, f"_p{i}")
-                        flats.append(v)  # RAW positions (kernel adjusts)
-                        offs_l.append(_runs_offsets(l))
-                        lens_l.append(l)
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                runs = [_list_col_runs(rb, f"_p{i}") for i in range(len(uniq))]
+                if repeats:
+                    # RAW positions (the kernel offset-adjusts per slot)
                     stf = _sloppy_freq_rpt_flat(
-                        flats,
-                        np.stack(offs_l, axis=1),
-                        np.stack(lens_l, axis=1),
+                        [v for v, _ in runs],
+                        np.stack([_runs_offsets(l) for _, l in runs], axis=1),
+                        np.stack([l for _, l in runs], axis=1),
                         gap_budget,
                         slot_term,
                     )
                     yield _emit_metric_batch(rb, "stf", stf, pa_.float64())
-
-            base = piv.mapInArrow(
-                arrow_rpt, "_docid long, norm_byte int, stf double"
-            )
-        else:
-
-            @F.pandas_udf(T.DoubleType())
-            def sloppy_tf(tp: pd.Series) -> pd.Series:
-                def unpack(entries) -> dict:
-                    pos = {}
-                    for e in entries:
-                        if isinstance(e, dict):
-                            pos[e["term"]] = np.asarray(
-                                e["positions"], dtype=np.int64
-                            )
-                        else:
-                            pos[e[0]] = np.asarray(e[1], dtype=np.int64)
-                    return pos
-
-                return tp.map(
-                    lambda entries: _sloppy_freq(
-                        unpack(entries), order_terms, gap_budget
+                    continue
+                # one column per slot, offset-adjusted by slot index
+                flats = [runs[u][0] - i for i, u in enumerate(slot_term)]
+                lens_l = [runs[u][1] for u in slot_term]
+                offs_l = [_runs_offsets(l) for l in lens_l]
+                if len(flats) == 2:
+                    stf = _sloppy_freq_2term_flat(
+                        flats[0], offs_l[0], lens_l[0],
+                        flats[1], offs_l[1], lens_l[1], gap_budget,
                     )
-                ).astype("float64")
+                else:
+                    stf = _sloppy_freq_krow_flat(
+                        flats,
+                        np.stack(offs_l, axis=1),
+                        np.stack(lens_l, axis=1),
+                        gap_budget,
+                    )
+                yield _emit_metric_batch(rb, "stf", stf, pa_.float64())
 
-            base = agg.select(
-                "_docid", "norm_byte", sloppy_tf(F.col("tp")).alias("stf")
-            )
-
-        scored = (
-            base.filter(F.col("stf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("stf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
-        )
+        base = piv.mapInArrow(arrow_stf, "_docid long, norm_byte int, stf double")
+        return self._clause_scores(base, "stf", idf_sum, boost)
 
     def _score_span_first(self, q: Q.SpanFirst) -> DataFrame:
         """``span_first``: tf = positions of the term with 0-based
         position < end — pure Catalyst array filter over the decoded
         position lists; scored as a BM25 clause with the adjusted tf."""
-        stats = self.index.term_stats([q.term])
-        if stats.empty:
+        idf_v = self._phrase_idf([q.term])
+        if idf_v is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_v = float(bm25.idf(int(stats["df"].iloc[0]), N))
         post = self.index.postings_for_terms([q.term], with_positions=True)
         end = int(q.end)
         tf2 = F.size(F.filter(F.col("positions"), lambda p: p < F.lit(end)))
-        scored = (
-            post.withColumn("tf2", tf2)
-            .filter(F.col("tf2") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("tf2"), F.lit(idf_v), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid", (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score")
-        )
+        return self._clause_scores(post.withColumn("tf2", tf2), "tf2", idf_v, q.boost)
 
     def _score_span_not(self, q: Q.SpanNot) -> DataFrame:
         """``span_not``: include-term positions whose [pos-pre, pos+post]
         window is free of every exclude-term position; tf = survivors.
         The exclusion test is a JVM ``exists`` lambda over the per-doc
         exclude position array (no Python)."""
-        stats = self.index.term_stats([q.include])
-        if stats.empty:
+        idf_v = self._phrase_idf([q.include])
+        if idf_v is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_v = float(bm25.idf(int(stats["df"].iloc[0]), N))
         inc = self.index.postings_for_terms([q.include], with_positions=True)
         exc = (
             self.index.postings_for_terms([str(t) for t in q.exclude], with_positions=True)
@@ -3636,19 +3474,8 @@ class SearchEngine:
                 F.lit(False),
             ),
         )
-        scored = (
-            joined.withColumn("tf2", F.size(surv))
-            .filter(F.col("tf2") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("tf2"), F.lit(idf_v), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid", (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score")
+        return self._clause_scores(
+            joined.withColumn("tf2", F.size(surv)), "tf2", idf_v, q.boost
         )
 
     def _score_span_contain(self, q) -> DataFrame:
@@ -3661,12 +3488,9 @@ class SearchEngine:
         interval.  Scored as one clause, idf = sum over involved terms
         (documented approximation)."""
         terms = sorted(set([str(t) for t in q.big_terms] + [str(q.little)]))
-        stats = self.index.term_stats(terms)
-        if len(stats) < len(terms):
+        idf_sum = self._phrase_idf(terms)
+        if idf_sum is None:
             return self._empty_scored()
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
         post = self.index.postings_for_terms(terms, with_positions=True)
         agg = (
             post.groupBy("_docid")
@@ -3682,7 +3506,7 @@ class SearchEngine:
         slop, in_order = int(q.big_slop), bool(q.big_in_order)
         within = isinstance(q, Q.SpanWithin)
 
-        if in_order and SLOPPY_BATCH_ENABLED:
+        if in_order:
             # ordered big spec: emit the big intervals with the lockstep
             # kernel, then containment is pure vectorized searchsorted
             # over the little positions (containing: intervals holding a
@@ -3811,21 +3635,7 @@ class SearchEngine:
             base = agg.select(
                 "_docid", "norm_byte", contain_tf(F.col("tp")).alias("ctf")
             )
-
-        scored = (
-            base.filter(F.col("ctf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("ctf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(q.boost))).alias("score"),
-        )
+        return self._clause_scores(base, "ctf", idf_sum, q.boost)
 
     def _score_interval_groups(
         self, groups: List[List[str]], max_gaps: int, ordered: bool, boost: float,
@@ -3859,128 +3669,77 @@ class SearchEngine:
         if any(not g for g in groups):
             return self._empty_scored()  # a multi-term slot expanded to nothing
         all_terms = sorted({t for g in groups for t in g})
-        stats = self.index.term_stats(all_terms)
-        present = set(stats["term"])
+        present = set(self.index.term_stats(all_terms)["term"])
         if any(not (set(g) & present) for g in groups):
             return self._empty_scored()  # a slot with no corpus term
-        N = self.index.stats["doc_count"]
-        avgdl = self.index.stats["avgdl"]
-        idf_sum = float(sum(bm25.idf(int(d), N) for d in stats["df"]))
+        idf_sum = self._phrase_idf(present)
         post = self.index.postings_for_terms(sorted(present), with_positions=True)
         agg = post.groupBy("_docid").agg(
             F.collect_list(F.struct("term", "positions")).alias("tp"),
             F.min("norm_byte").alias("norm_byte"),
         )
         slot_groups = [list(g) for g in groups]
-        slot_names = [f"\x00g{i}" for i in range(len(groups))]
         gap_budget, want_ordered = max_gaps, ordered
         fixed_gaps = list(gaps) if gaps else None
 
-        if SLOPPY_BATCH_ENABLED:
-            # composition: merge each slot's member position lists
-            # JVM-side (concat -> distinct -> sort over the per-term
-            # map, missing members coalesced away) and run the same
-            # lockstep kernels as ``_score_intervals`` (ordered chain /
-            # unordered minimal window); docs with an unmatched slot
-            # are filtered before the Arrow stage
-            k = len(slot_groups)
-            steps = [
-                1 + (fixed_gaps[i] if fixed_gaps else 0) for i in range(k - 1)
-            ]
-            total_len = k + (sum(fixed_gaps) if fixed_gaps else 0)
-            empty_arr = F.array().cast("array<bigint>")
-            piv = agg.select(
-                "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
-            ).select(
-                "_docid",
-                "norm_byte",
-                *[
-                    F.array_sort(
-                        F.array_distinct(
-                            F.concat(
-                                *[
-                                    F.coalesce(
-                                        F.element_at(F.col("pm"), F.lit(t)),
-                                        empty_arr,
-                                    )
-                                    for t in members
-                                ]
-                            )
-                        )
-                    ).alias(f"_g{i}")
-                    for i, members in enumerate(slot_groups)
-                ],
-            )
-            for i in range(k):
-                piv = piv.filter(F.size(F.col(f"_g{i}")) > 0)
-
-            def arrow_gtf(batches):
-                import pyarrow as pa_
-
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    runs = [_list_col_runs(rb, f"_g{i}") for i in range(k)]
-                    if want_ordered:
-                        itf = _ordered_intervals_count_flat(
-                            [r[0] for r in runs], [r[1] for r in runs],
-                            steps, total_len, gap_budget,
-                        )
-                    else:
-                        itf = _unordered_intervals_count_flat(
-                            [r[0] for r in runs], [r[1] for r in runs],
-                            gap_budget,
-                        )
-                    yield _emit_metric_batch(
-                        rb, "itf", itf.astype(np.int32), pa_.int32()
-                    )
-
-            base = piv.mapInArrow(
-                arrow_gtf, "_docid long, norm_byte int, itf int"
-            )
-        else:
-
-            @F.pandas_udf(T.IntegerType())
-            def interval_tf(tp: pd.Series) -> pd.Series:
-                def one(entries) -> int:
-                    by_term = {}
-                    for e in entries:
-                        if isinstance(e, dict):
-                            by_term[e["term"]] = np.asarray(
-                                e["positions"], dtype=np.int64
-                            )
-                        else:
-                            by_term[e[0]] = np.asarray(e[1], dtype=np.int64)
-                    pos = {}
-                    for name, members in zip(slot_names, slot_groups):
-                        arrs = [by_term[t] for t in members if t in by_term]
-                        if not arrs:
-                            return 0  # slot unmatched in this doc
-                        pos[name] = np.unique(np.concatenate(arrs))
-                    return _count_intervals(
-                        pos, slot_names, gap_budget, want_ordered, fixed_gaps
-                    )
-
-                return tp.map(one).astype("int32")
-
-            base = agg.select(
-                "_docid", "norm_byte", interval_tf(F.col("tp")).alias("itf")
-            )
-
-        scored = (
-            base.filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(idf_sum), F.col("dl"), avgdl, self.k1, self.b
-                ),
-            )
-        )
-        return scored.select(
+        # composition: merge each slot's member position lists
+        # JVM-side (concat -> distinct -> sort over the per-term
+        # map, missing members coalesced away) and run the same
+        # lockstep kernels as ``_score_intervals`` (ordered chain /
+        # unordered minimal window); docs with an unmatched slot
+        # are filtered before the Arrow stage
+        k = len(slot_groups)
+        steps = [
+            1 + (fixed_gaps[i] if fixed_gaps else 0) for i in range(k - 1)
+        ]
+        total_len = k + (sum(fixed_gaps) if fixed_gaps else 0)
+        empty_arr = F.array().cast("array<bigint>")
+        piv = agg.select(
+            "_docid", "norm_byte", F.map_from_entries("tp").alias("pm")
+        ).select(
             "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
+            "norm_byte",
+            *[
+                F.array_sort(
+                    F.array_distinct(
+                        F.concat(
+                            *[
+                                F.coalesce(
+                                    F.element_at(F.col("pm"), F.lit(t)),
+                                    empty_arr,
+                                )
+                                for t in members
+                            ]
+                        )
+                    )
+                ).alias(f"_g{i}")
+                for i, members in enumerate(slot_groups)
+            ],
         )
+        for i in range(k):
+            piv = piv.filter(F.size(F.col(f"_g{i}")) > 0)
+
+        def arrow_gtf(batches):
+            import pyarrow as pa_
+
+            for rb in batches:
+                if rb.num_rows == 0:
+                    continue
+                runs = [_list_col_runs(rb, f"_g{i}") for i in range(k)]
+                if want_ordered:
+                    itf = _ordered_intervals_count_flat(
+                        [r[0] for r in runs], [r[1] for r in runs],
+                        steps, total_len, gap_budget,
+                    )
+                else:
+                    itf = _unordered_intervals_count_flat(
+                        [r[0] for r in runs], [r[1] for r in runs],
+                        gap_budget,
+                    )
+                yield _emit_metric_batch(rb, "itf", itf.astype(np.int32), pa_.int32())
+
+        base = piv.mapInArrow(arrow_gtf, "_docid long, norm_byte int, itf int")
+        return self._clause_scores(base, "itf", idf_sum, boost)
 
     def termvectors(self, doc_id_tuple) -> DataFrame:
         """``_termvectors`` (SURVEY.md §3.3): per-term tf within one doc
@@ -4379,17 +4138,16 @@ class SearchEngine:
         for i, (w, b) in enumerate(clauses):
             # per-clause weight (query-term multiplicity) as a CASE over
             # the term column; stays inside whole-stage codegen
-            weight = F.lit(0.0)
-            for t, c in w.items():
-                weight = F.when(F.col("term") == t, F.lit(float(c))).otherwise(weight)
-            aggs.append(
-                F.sum(F.col("s").cast("double") * weight * F.lit(b)).alias(f"_c{i}")
+            weight = bm25.term_case_sql(
+                {t: bm25.sql_double(c) for t, c in w.items()}, "0.0D"
             )
             aggs.append(
-                F.max(
-                    F.when(F.col("term").isin(list(w)), F.lit(1)).otherwise(0)
-                ).alias(f"_m{i}")
+                F.expr(
+                    f"sum(CAST(s AS DOUBLE) * ({weight}) * {bm25.sql_double(b)})"
+                ).alias(f"_c{i}")
             )
+            matched = bm25.term_case_sql({t: "1" for t in w}, "0")
+            aggs.append(F.expr(f"max({matched})").alias(f"_m{i}"))
         grouped = per.groupBy("_docid").agg(*aggs)
         # best/total over MATCHED clauses only (an unmatched clause's
         # conditional sum is 0.0, which must not count as a score)
@@ -5257,29 +5015,37 @@ def _parse_time_value(v, out_unit: str) -> float:
 
 def _parse_nanos(value: str, formats) -> int:
     """A date_nanos string -> epoch nanoseconds (UTC), trying the
-    field's format list (java patterns translated to strptime)."""
+    field's format list (java patterns translated to strptime).  A
+    trailing ``Z`` or ``±HH:MM`` offset is stripped and applied; the
+    seconds part parses with strptime and the fraction digits are taken
+    separately, at nanosecond resolution (strptime's ``%f`` stops at
+    microseconds)."""
     import calendar
     from datetime import datetime
 
+    m = re.fullmatch(r"(.+?)(?:\.(\d{1,9}))?(Z|[+-]\d{2}:?\d{2})?", value.strip())
+    if m is None:
+        raise ValueError(f"cannot parse date_nanos value {value!r}")
+    head, frac, tz = m.groups()
+    offset_s = 0
+    if tz and tz != "Z":
+        sign = -1 if tz[0] == "-" else 1
+        offset_s = sign * (int(tz[1:3]) * 3600 + int(tz[-2:]) * 60)
     reps = [("yyyy", "%Y"), ("MM", "%m"), ("dd", "%d"), ("HH", "%H"),
-            ("mm", "%M"), ("ss", "%S"), ("SSSSSSSSS", "%f"),
-            ("SSSSSS", "%f"), ("SSS", "%f")]
+            ("mm", "%M"), ("ss", "%S")]
     for fmt in list(formats) + ["strict_date_optional_time"]:
-        py = fmt
         if fmt == "strict_date_optional_time":
-            py = "%Y-%m-%dT%H:%M:%S.%f" if "." in value else (
-                "%Y-%m-%dT%H:%M:%S" if "T" in value else "%Y-%m-%d")
+            py = "%Y-%m-%dT%H:%M:%S" if "T" in head else "%Y-%m-%d"
         else:
+            py = re.sub(r"\.S+", "", fmt)  # the fraction is parsed apart
             for a, b in reps:
                 py = py.replace(a, b)
         try:
-            dt = datetime.strptime(value, py)
+            dt = datetime.strptime(head, py)
         except ValueError:
             continue
-        return (
-            calendar.timegm(dt.timetuple()) * 1_000_000_000
-            + dt.microsecond * 1_000
-        )
+        nanos = int(frac.ljust(9, "0")) if frac else 0
+        return (calendar.timegm(dt.timetuple()) - offset_s) * 1_000_000_000 + nanos
     raise ValueError(f"cannot parse date_nanos value {value!r}")
 
 

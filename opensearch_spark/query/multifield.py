@@ -206,7 +206,6 @@ class MultiFieldEngine:
 
         from pyspark.sql import types as T
 
-        from opensearch_spark.query import bm25
         from opensearch_spark.query.executor import _count_intervals
 
         if not any(f == self.default_field for f, _ in clauses):
@@ -220,12 +219,10 @@ class MultiFieldEngine:
         parts: List[DataFrame] = []
         for i, (f, t) in enumerate(clauses):
             eng = self.engines[f]
-            st = eng.index.term_stats([t])
-            if st.empty:
+            idf_t = eng._phrase_idf([t])
+            if idf_t is None:
                 return deng._empty_scored()
-            idf_sum += bm25.idf(
-                int(st["df"].iloc[0]), eng.index.stats["doc_count"]
-            )
+            idf_sum += idf_t
             post = eng.index.postings_for_terms([t], with_positions=True)
             norm_t = post.schema["norm_byte"].dataType
             norm = (
@@ -273,20 +270,6 @@ class MultiFieldEngine:
 
             return tp.map(one).astype("int32")
 
-        avgdl = deng.index.stats["avgdl"]
-        scored = (
-            agg.withColumn("itf", interval_tf(F.col("tp")))
-            .filter(F.col("itf") > 0)
-            .withColumn("dl", bm25.norm_decode_col(F.col("norm_byte")))
-            .withColumn(
-                "s",
-                bm25.term_score_col(
-                    F.col("itf"), F.lit(float(idf_sum)), F.col("dl"), avgdl,
-                    deng.k1, deng.b,
-                ),
-            )
-        )
-        return scored.select(
-            "_docid",
-            (F.col("s").cast("double") * F.lit(float(boost))).alias("score"),
+        return deng._clause_scores(
+            agg.withColumn("itf", interval_tf(F.col("tp"))), "itf", idf_sum, boost
         )

@@ -69,6 +69,11 @@ class Similarity:
         """Numpy twin of score_col (oracle/tests)."""
         raise NotImplementedError
 
+    def clause_col(self, tf: str, tconst: str, norm: str) -> Column:
+        """The engine's entry point: score from the tf, per-term constant
+        and norm-byte column names."""
+        return self.score_col(F.col(tf), F.col(tconst), bm25.norm_decode_col(norm))
+
 
 @dataclass
 class BM25(Similarity):
@@ -83,8 +88,8 @@ class BM25(Similarity):
     def term_const(self, df, ttf, n, sum_dl):
         return bm25.idf(int(df), int(n))
 
-    def score_col(self, tf, tconst, dl):
-        return bm25.term_score_col(tf, tconst, dl, self.avgdl, self.k1, self.b)
+    def clause_col(self, tf, tconst, norm):
+        return bm25.score_col(tf, tconst, norm, self.avgdl, self.k1, self.b)
 
     def score_np(self, tf, tconst, dl):
         return bm25.term_score_np(tf, tconst, dl, self.avgdl, self.k1, self.b)

@@ -46,25 +46,25 @@ from pyspark.sql import functions as F
 from opensearch_spark.query import bm25
 
 
+def _per_term(values: Dict[str, float], terms) -> str:
+    """SQL CASE giving each of ``terms`` its float from ``values``."""
+    return bm25.term_case_sql({t: bm25.sql_double(values[t]) for t in terms})
+
+
 def block_bounds_df(index, terms: List[str], idf_by_term: Dict[str, float], avgdl: float,
                     k1: float, b: float) -> DataFrame:
     """Block metadata + upper-bound score, no binary columns touched:
     reads the executor-memory-pinned ``block_meta()`` frame (the Lucene
     skip-data-in-heap analog), so repeated metadata passes never re-walk
     the postings parquet."""
-    idf_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
+    idf = _per_term(idf_by_term, terms)
     meta = index.block_meta()
     has_ach = "max_tf_norm" in meta.columns
     blocks = meta.filter(F.col("term").isin(list(terms))).select(
         "term", "_seg", "block_id", "base_doc", "last_doc", "max_tf", "min_norm",
         *(["max_tf_norm"] if has_ach else []),
     )
-    dl_ub = bm25.norm_decode_col(F.col("min_norm"))
-    ub = bm25.term_score_col(
-        F.col("max_tf"), idf_map[F.col("term")], dl_ub, avgdl, k1, b
-    ).cast("double")
+    ub = bm25.score_col("max_tf", idf, "min_norm", avgdl, k1, b).cast("double")
     out = blocks.withColumn("ub", ub)
     # ACHIEVABLE per-block score: score(max_tf, dl(max_tf_norm)) — a
     # real doc in the block attains it (metadata_threshold_df's t), so
@@ -73,14 +73,7 @@ def block_bounds_df(index, terms: List[str], idf_by_term: Dict[str, float], avgd
     if has_ach:
         out = out.withColumn(
             "ach",
-            bm25.term_score_col(
-                F.col("max_tf"),
-                idf_map[F.col("term")],
-                bm25.norm_decode_col(F.col("max_tf_norm")),
-                avgdl,
-                k1,
-                b,
-            ).cast("double"),
+            bm25.score_col("max_tf", idf, "max_tf_norm", avgdl, k1, b).cast("double"),
         )
     else:
         out = out.withColumn("ach", F.lit(None).cast("double"))
@@ -109,26 +102,13 @@ def metadata_threshold_df(engine, present, weights, idf_by_term, avgdl, k: int):
     post = engine.index.block_meta()
     if "max_tf_norm" not in post.columns:
         return None
-    idf_map = F.create_map(
-        *[x for t in present for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
-    w_map = F.create_map(
-        *[x for t in present for x in (F.lit(t), F.lit(float(weights[t])))]
-    )
     blocks = post.filter(F.col("term").isin(list(present))).select(
         "term", "max_tf", "max_tf_norm"
     )
-    ach = (
-        bm25.term_score_col(
-            F.col("max_tf"),
-            idf_map[F.col("term")],
-            bm25.norm_decode_col(F.col("max_tf_norm")),
-            avgdl,
-            engine.k1,
-            engine.b,
-        ).cast("double")
-        * w_map[F.col("term")]
-    )
+    ach = bm25.score_col(
+        "max_tf", _per_term(idf_by_term, present), "max_tf_norm", avgdl,
+        engine.k1, engine.b,
+    ).cast("double") * F.expr(_per_term(weights, present))
     w = Window.partitionBy("term").orderBy(F.desc("a"))
     return (
         blocks.withColumn("a", ach)
@@ -411,7 +391,7 @@ def _pruned_distributed(
     from pyspark.sql import Window
 
     spark = engine.spark
-    w_map = F.create_map(*[x for t in present for x in (F.lit(t), F.lit(float(weights[t])))])
+    w_case = f"({_per_term(weights, present)})"
 
     # ---- asymmetric split: keep RARE terms' blocks, prune FREQUENT ---
     # the split is RELATIVE: a term is "rare" when decoding it is cheap
@@ -586,11 +566,10 @@ def _pruned_distributed(
         # segment) bounds; align(t, g) = seg_total(g) - w_t * gub_{t,g}
         fbounds = base.withColumn("rbound", F.lit(0.0))
     aligned = fbounds.join(F.broadcast(gub_local), ["term", "seg"])
-    keep_pred = (
-        F.col("ub") * w_map[F.col("term")]
-        + (F.col("seg_total") - F.col("gub") * w_map[F.col("term")])
-        + F.col("rbound")
-    ) >= F.lit(t_thresh)
+    keep_pred = F.expr(
+        f"ub * {w_case} + (seg_total - gub * {w_case}) + rbound"
+        f" >= {bm25.sql_double(t_thresh)}"
+    )
     kept = engine._pinned.pin(
         aligned.filter(keep_pred)
         .select("term", "block_id", "base_doc")
@@ -631,11 +610,12 @@ def _score_block_frame(
     broadcast_keys: bool = True,
 ) -> DataFrame:
     """Decode + exactly score the block rows identified by ``keys_df``
-    (term, block_id, base_doc) without collecting them.  With
-    ``broadcast_keys`` the 3-column key frame is broadcast so the
-    posting scan — whose rows carry the packed binary columns — is
-    never shuffled; callers turn it off when the kept set is large
-    (the semi-join then shuffles keys, still never the binaries)."""
+    (term, block_id, base_doc) without collecting them; per-doc score =
+    sum over decoded contributions.  With ``broadcast_keys`` the
+    3-column key frame is broadcast so the posting scan — whose rows
+    carry the packed binary columns — is never shuffled; callers turn
+    it off when the kept set is large (the semi-join then shuffles
+    keys, still never the binaries)."""
     keys = keys_df.select("term", "block_id", "base_doc")
     if broadcast_keys:
         keys = F.broadcast(keys)
@@ -644,56 +624,23 @@ def _score_block_frame(
         .filter(F.col("term").isin(list(terms)))
         .join(keys, ["term", "block_id", "base_doc"], "semi")
     )
-    return _score_decoded(engine, terms, weights, idf_by_term, avgdl, blocks)
-
-
-def _score_decoded(engine, terms, weights, idf_by_term, avgdl, blocks: DataFrame) -> DataFrame:
-    decoded = engine.index.decode_blocks(blocks)
-    w_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(int(weights[t])))]
+    s = bm25.score_col(
+        "tf", _per_term(idf_by_term, terms), "norm_byte", avgdl, engine.k1, engine.b
     )
-    idf_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
-    per = decoded.withColumn("dl", bm25.norm_decode_col(F.col("norm_byte"))).withColumn(
-        "s",
-        bm25.term_score_col(
-            F.col("tf"), idf_map[F.col("term")], F.col("dl"), avgdl, engine.k1, engine.b
-        ),
-    )
-    return per.groupBy("_docid").agg(
-        F.sum(F.col("s").cast("double") * w_map[F.col("term")]).alias("score")
+    w = F.expr(_per_term(weights, terms))
+    return (
+        engine.index.decode_blocks(blocks)
+        .groupBy("_docid")
+        .agg(F.sum(s.cast("double") * w).alias("score"))
     )
 
 
 def _score_blocks(engine, terms, weights, idf_by_term, avgdl, keys) -> DataFrame:
-    """Decode + exactly score a specific set of (term, block_id,
-    base_doc) blocks; per-doc score = sum over decoded contributions."""
-    spark = engine.spark
+    """``_score_block_frame`` over a driver-side list of block keys."""
     if not keys:
         return engine._empty_scored()
-    keys_df = spark.createDataFrame(
+    keys_df = engine.spark.createDataFrame(
         [(t, int(bid), int(bd)) for t, bid, bd in keys],
         "term string, block_id int, base_doc long",
     )
-    blocks = (
-        engine.index.postings()
-        .filter(F.col("term").isin(list(terms)))
-        .join(F.broadcast(keys_df), ["term", "block_id", "base_doc"], "semi")
-    )
-    decoded = engine.index.decode_blocks(blocks)
-    w_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(int(weights[t])))]
-    )
-    idf_map = F.create_map(
-        *[x for t in terms for x in (F.lit(t), F.lit(float(idf_by_term[t])))]
-    )
-    per = decoded.withColumn("dl", bm25.norm_decode_col(F.col("norm_byte"))).withColumn(
-        "s",
-        bm25.term_score_col(
-            F.col("tf"), idf_map[F.col("term")], F.col("dl"), avgdl, engine.k1, engine.b
-        ),
-    )
-    return per.groupBy("_docid").agg(
-        F.sum(F.col("s").cast("double") * w_map[F.col("term")]).alias("score")
-    )
+    return _score_block_frame(engine, terms, weights, idf_by_term, avgdl, keys_df)

@@ -47,7 +47,7 @@ def init_index_dir(spark: SparkSession, index_dir: str, cfg: IndexConfig, schema
         "incremental": True,
         "n_segments": cfg.n_segments,
         "block_size": cfg.block_size,
-        "codec": cfg.codec,
+        "codec": "varint",
         "stopwords": cfg.stopwords,
         "id_cols": list(cfg.id_cols),
         "routing_col": cfg.routing(),

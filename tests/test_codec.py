@@ -68,48 +68,28 @@ def test_empty():
     assert codec.pack_positions(np.array([]), np.array([])) == b""
 
 
-# ---------------------------------------------------------- FOR codec
-
-import numpy as np
-import pytest as _pytest
-
-from opensearch_spark.index import codec as _c
-
-
-@_pytest.mark.parametrize("seed", [1, 2, 3])
-def test_for_block_roundtrip(seed):
-    rng = np.random.RandomState(seed)
-    for n in (0, 1, 7, 128, 300):
-        for hi in (1, 2, 255, 1 << 20, 1 << 45):
-            v = rng.randint(0, hi, size=n).astype(np.uint64)
-            out = _c.for_decode_block(_c.for_encode_block(v), n)
-            assert np.array_equal(out, v), (n, hi)
-
-
-def test_for_zero_width():
-    v = np.zeros(128, dtype=np.uint64)
-    buf = _c.for_encode_block(v)
-    assert buf == b"\x00"
-    assert np.array_equal(_c.for_decode_block(buf, 128), v)
-
-
-@_pytest.mark.parametrize("name", ["varint", "for"])
-def test_codec_encode_blocks_roundtrip(name):
+def test_encode_blocks_roundtrip():
     rng = np.random.RandomState(9)
     vals = rng.randint(0, 1000, size=1000).astype(np.uint64)
-    starts, ends = _c.block_bounds(1000, 128)
-    bc = _c.get_codec(name)
-    blocks = bc.encode_blocks(vals, starts, ends)
-    out = np.concatenate(
-        [bc.decode(b, e - s) for b, s, e in zip(blocks, starts, ends)]
-    ).astype(np.uint64)
+    starts, ends = codec.block_bounds(1000, 128)
+    blocks = codec.encode_blocks(vals, starts, ends)
+    assert len(blocks) == starts.size
+    out = np.concatenate([codec.varint_decode(b) for b in blocks])
     assert np.array_equal(out, vals)
 
 
-def test_for_denser_on_small_gaps():
-    """FOR beats varint on dense (hot-term) gap runs — the reason the
-    reference uses FOR blocks for postings."""
-    gaps = np.ones(128, dtype=np.uint64)  # stopword-like: every doc
-    for_size = len(_c.for_encode_block(gaps))
-    varint_size = len(_c.varint_encode(gaps))
-    assert for_size < varint_size
+def test_non_varint_plan_rejected_on_open(tmp_path):
+    """The engine reads varint postings only: an index whose plan.json
+    names another codec fails with a typed error as soon as the plan is
+    read (every engine reads it at construction), not at first decode."""
+    import json
+
+    import pytest
+
+    from opensearch_spark.index.reader import InvertedIndex
+
+    (tmp_path / "plan.json").write_text(json.dumps({"codec": "for"}))
+    with pytest.raises(codec.UnsupportedCodecError, match="'for'"):
+        InvertedIndex(None, str(tmp_path)).plan
+    (tmp_path / "plan.json").write_text(json.dumps({"codec": "varint"}))
+    assert InvertedIndex(None, str(tmp_path)).plan == {"codec": "varint"}

@@ -40,7 +40,7 @@ def test_match_priority_and_merge_order(reg):
     cfg = reg.resolve_config("logs-prod")
     assert cfg.n_segments == 8 and cfg.text_col == "message"
     # unmatched settings keep IndexConfig defaults
-    assert cfg.codec == "varint"
+    assert cfg.block_size == 128
     # no match at all -> pure defaults over the given base
     assert reg.resolve_config("zzz").n_segments == 2  # catchall
 

@@ -11,6 +11,7 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from opensearch_spark.analysis import analyzer as ana
 from opensearch_spark.analysis import smallfloat as sfl
@@ -284,15 +285,68 @@ def test_explain_tombstoned_doc_reports_deleted(spark, tmp_path, corpus_pdf):
     assert out2["matched"] is False
 
 
+def _scalar_scored(engine, terms, freq_of, require_all=True):
+    """{_docid: score} computed outside the engine's scorers: decoded
+    positions of every doc holding ``terms`` (all of them, or any with
+    ``require_all=False``), the per-doc frequency from ``freq_of(pos)``
+    (a scalar reference enumerator), scored as one BM25 clause with the
+    summed idf via the numpy twin."""
+    uniq = sorted(set(terms))
+    docs = {}
+    for r in engine.index.postings_for_terms(uniq, with_positions=True).collect():
+        d = docs.setdefault(r["_docid"], {"pos": {}, "norm": r["norm_byte"]})
+        d["pos"][r["term"]] = np.asarray(r["positions"], dtype=np.int64)
+    N = engine.index.stats["doc_count"]
+    stats = engine.index.term_stats(uniq)
+    assert len(stats) == len(uniq)
+    idf_sum = float(sum(bm25.idf(int(df), N) for df in stats["df"]))
+    out = {}
+    for docid, d in docs.items():
+        if require_all and len(d["pos"]) < len(uniq):
+            continue
+        freq = freq_of(d["pos"])
+        if freq > 0:
+            s = bm25.term_score_np(
+                np.array([freq]), idf_sum, sfl.DECODE_TABLE[[d["norm"]]],
+                engine.index.stats["avgdl"], engine.k1, engine.b,
+            )[0]
+            out[docid] = round(float(s), 9)
+    return out
+
+
+def _group_freq(groups, max_gaps, ordered):
+    """Interval count over slots that accept any member of a group."""
+    from opensearch_spark.query.executor import _count_intervals
+
+    names = [f"g{i}" for i in range(len(groups))]
+
+    def freq(pos):
+        slots = {}
+        for name, members in zip(names, groups):
+            arrs = [pos[t] for t in members if t in pos]
+            if not arrs:
+                return 0
+            slots[name] = np.unique(np.concatenate(arrs))
+        return _count_intervals(slots, names, max_gaps, ordered)
+
+    return freq
+
+
 def test_ordered_interval_groups_arrow_matches_scalar(engine):
     """Ordered any_of composition and span_multi-in-order span_near run
-    the Arrow lockstep path; forcing the scalar enumerator
-    (SLOPPY_BATCH_ENABLED=False) must give identical scored rows.
-    Guards the JVM slot-union pivot + arrow_gtf wiring end-to-end."""
-    from opensearch_spark.query import executor as ex
-
-    queries = [
-        Q.from_dict(
+    the Arrow lockstep path; the scalar enumerator (_count_intervals
+    over the decoded positions, each slot the union of its members)
+    must give identical scored rows.  Guards the JVM slot-union pivot +
+    arrow_gtf wiring end-to-end."""
+    err = sorted(
+        r["term"]
+        for r in engine.index.dictionary()
+        .filter(F.col("term").startswith("err"))
+        .select("term")
+        .collect()
+    )
+    cases = [
+        (
             {
                 "intervals": {
                     "text": {
@@ -313,9 +367,10 @@ def test_ordered_interval_groups_arrow_matches_scalar(engine):
                         }
                     }
                 }
-            }
+            },
+            [["error", "the"], ["handling"]], 3,
         ),
-        Q.from_dict(
+        (
             {
                 "span_near": {
                     "clauses": [
@@ -325,23 +380,21 @@ def test_ordered_interval_groups_arrow_matches_scalar(engine):
                     "slop": 2,
                     "in_order": True,
                 }
-            }
+            },
+            [err, ["handling"]], 2,
         ),
     ]
     total = 0
-    for q in queries:
-        assert ex.SLOPPY_BATCH_ENABLED
+    for q, groups, max_gaps in cases:
         arrow = {
-            r["_docid"]: round(r["score"], 9) for r in engine._score(q).collect()
+            r["_docid"]: round(r["score"], 9)
+            for r in engine._score(Q.from_dict(q)).collect()
         }
-        ex.SLOPPY_BATCH_ENABLED = False
-        try:
-            scalar = {
-                r["_docid"]: round(r["score"], 9)
-                for r in engine._score(q).collect()
-            }
-        finally:
-            ex.SLOPPY_BATCH_ENABLED = True
+        # idf sums every member; slot coverage is the frequency's job
+        scalar = _scalar_scored(
+            engine, [t for g in groups for t in g],
+            _group_freq(groups, max_gaps, True), require_all=False,
+        )
         assert arrow == scalar
         total += len(arrow)
     assert total > 0  # non-vacuous: the fixture corpus matches both
@@ -349,8 +402,10 @@ def test_ordered_interval_groups_arrow_matches_scalar(engine):
 
 def test_span_contain_within_arrow_matches_scalar(engine):
     """span_containing / span_within with an in_order big spec run the
-    emit-kernel Arrow path; the scalar enumerator must agree exactly."""
-    from opensearch_spark.query import executor as ex
+    emit-kernel Arrow path; the scalar enumerator (_find_intervals over
+    the decoded positions, then little positions inside each big
+    interval) must agree exactly."""
+    from opensearch_spark.query.executor import _find_intervals
 
     big = {
         "span_near": {
@@ -362,23 +417,51 @@ def test_span_contain_within_arrow_matches_scalar(engine):
             "in_order": True,
         }
     }
+
+    def contain_freq(within):
+        def freq(pos):
+            lp = pos["a"]
+            hits = [
+                lp[(lp >= s) & (lp <= e)]
+                for s, e in _find_intervals(pos, ["the", "of"], 4, True)
+            ]
+            if within:
+                return len({int(x) for h in hits for x in h})
+            return sum(1 for h in hits if h.size)
+
+        return freq
+
     total = 0
     for kind in ("span_containing", "span_within"):
         q = Q.from_dict(
             {kind: {"big": big, "little": {"span_term": {"text": "a"}}}}
         )
-        assert ex.SLOPPY_BATCH_ENABLED
         arrow = {
             r["_docid"]: round(r["score"], 9) for r in engine._score(q).collect()
         }
-        ex.SLOPPY_BATCH_ENABLED = False
-        try:
-            scalar = {
-                r["_docid"]: round(r["score"], 9)
-                for r in engine._score(q).collect()
-            }
-        finally:
-            ex.SLOPPY_BATCH_ENABLED = True
+        scalar = _scalar_scored(
+            engine, ["the", "of", "a"], contain_freq(kind == "span_within")
+        )
         assert arrow == scalar, kind
         total += len(arrow)
     assert total > 0
+
+
+def test_sloppy_phrase_matches_scalar(engine):
+    """Sloppy phrases — distinct terms and a repeat group — run the
+    lockstep kernels; the scalar PhraseQueue simulation (_sloppy_freq
+    over the decoded positions) must give identical scored rows."""
+    from opensearch_spark.query.executor import _sloppy_freq
+
+    for text, slop in (("error handling", 2), ("the of the", 4)):
+        tokens = engine.index.analyze(text)
+        q = {"match_phrase": {"text": {"query": text, "slop": slop}}}
+        arrow = {
+            r["_docid"]: round(r["score"], 9)
+            for r in engine._score(Q.from_dict(q)).collect()
+        }
+        scalar = _scalar_scored(
+            engine, tokens, lambda pos: _sloppy_freq(pos, tokens, slop)
+        )
+        assert arrow == scalar, text
+        assert arrow, text  # non-vacuous for both kernels

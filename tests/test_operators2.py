@@ -74,6 +74,31 @@ def test_match_bool_prefix_membership(engine, corpus_pdf):
     assert got == expect
 
 
+def test_match_bool_prefix_repeated_token_clauses(engine, oracle):
+    """A repeated token is one clause PER OCCURRENCE (the reference's
+    BooleanQuery keeps duplicates): 'error error time' scores 'error'
+    twice and counts it twice toward minimum_should_match, so a doc
+    holding 'error' alone meets msm=2.  Hand-computed from the oracle:
+    2 * score(error) + 1.0 for a time* doc (constant-score prefix)."""
+    from tests.conftest import assert_rank_identical
+
+    rows = engine.search(
+        {
+            "match_bool_prefix": {
+                "text": {"query": "error error time", "minimum_should_match": 2}
+            }
+        },
+        size=10_000,
+    ).collect()
+    pfx = {d for t, pl in oracle.post.items() if t.startswith("time") for d in pl}
+    gold = {
+        d: 2.0 * s + (1.0 if d in pfx else 0.0)
+        for d, s in oracle.term("error").items()
+    }
+    assert len(gold) > len(pfx & set(gold))  # some 'error'-only docs qualify
+    assert_rank_identical(rows, oracle.topk(gold, 10_000))
+
+
 # ------------------------------------------- match_phrase_prefix
 
 def test_match_phrase_prefix_membership(engine, corpus_pdf):

@@ -98,34 +98,6 @@ def test_score_monotone_in_tf(oracle):
         prev = s
 
 
-def test_for_codec_index_equivalent(spark, tmp_path, oracle):
-    """An index built with the FOR block codec returns results identical
-    to the varint index (format choice is invisible to queries), and
-    survives merge/compaction."""
-    from opensearch_spark.index.merge import merge_index
-    from opensearch_spark.transcripts import generate
-
-    docs = generate(spark, 120, partitions=4)
-    dirs = {}
-    for name in ("varint", "for"):
-        d = str(tmp_path / name)
-        build_index(spark, docs, d, IndexConfig(n_segments=4, codec=name))
-        dirs[name] = SearchEngine(InvertedIndex(spark, d))
-    for q in [
-        {"match": {"text": "error handling"}},
-        {"match_phrase": {"text": "error handling"}},
-        {"match": {"text": "the"}},
-    ]:
-        a = dirs["varint"].search(q, size=10).collect()
-        b = dirs["for"].search(q, size=10).collect()
-        assert a == b, q
-    md = str(tmp_path / "for_merged")
-    merge_index(spark, str(tmp_path / "for"), md, hot_blocks=2)
-    meng = SearchEngine(InvertedIndex(spark, md))
-    q = {"match_phrase": {"text": "error handling"}}
-    assert dirs["for"].search(q, size=10).collect() == meng.search(q, size=10).collect()
-
-
 def test_simple_query_string_is_lenient():
     """simple_query_string must NEVER raise on malformed input
     (SimpleQueryStringQueryParser leniency) — property-tested over

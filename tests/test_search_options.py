@@ -290,3 +290,28 @@ def test_highlight_fragments_case_punct_and_spacing(spark, tmp_path):
         {"term": {"doc_id": 2}}, size=5, no_match_size=30
     ).collect()
     assert [(r["doc_id"], r["frag"]) for r in nm] == [(2, -1)]
+
+
+@pytest.mark.parametrize(
+    "value,nanos",
+    [
+        ("2018-10-29T12:12:12.123Z", 1540815132_123000000),
+        ("2018-10-29T12:12:12.123456", 1540815132_123456000),
+        ("2018-10-29T12:12:12.123456789Z", 1540815132_123456789),
+        ("2018-10-29T12:12:12.123456789", 1540815132_123456789),
+        ("2018-10-29T12:12:12.123456789+01:00", 1540811532_123456789),
+        ("2018-10-29T12:12:12.123-05:30", 1540834932_123000000),
+        ("2018-10-29T12:12:12Z", 1540815132_000000000),
+        ("2018-10-29", 1540771200_000000000),
+    ],
+)
+def test_parse_nanos_fractions_and_offsets(value, nanos):
+    """date_nanos search_after values parse at nanosecond resolution,
+    including the engine's own 9-digit renderings, with and without a
+    ``Z`` or ``±HH:MM`` offset."""
+    from opensearch_spark.query.executor import _parse_nanos
+
+    assert _parse_nanos(value, []) == nanos
+    # the same instant in a field's own java pattern (fraction apart)
+    fmt = ["yyyy-MM-dd HH:mm:ss.SSSSSSSSS"]
+    assert _parse_nanos(value.replace("T", " "), fmt) == nanos

@@ -80,6 +80,10 @@ pytestmark = pytest.mark.skipif(
 
 
 def _cases():
+    # collection runs before the module's skipif applies: without the
+    # spec directory there is nothing to load, and the skip reports it
+    if not os.path.isdir(SPEC_DIR):
+        return []
     out = []
     for rel in FILES:
         for name, steps in load_file(rel):
